@@ -1,12 +1,21 @@
 """Streaming flavor: stream==batch equivalence + stateful operator."""
 
+import json
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from timberjack_spark.fixtures import transcripts_df
 from timberjack_spark.functions.extract import with_parsed
 from timberjack_spark.operators.route import with_category
-from timberjack_spark.streaming.pipeline import run_session_stats_once, run_stream_once
+from timberjack_spark.streaming.pipeline import (
+    drain,
+    run_session_stats_once,
+    run_stream_dedup_once,
+    run_stream_once,
+    stream_source,
+)
 
 N = 5000
 
@@ -33,6 +42,39 @@ def test_stream_equals_batch(spark, src_dir):
         .collect()
     }
     assert got == expected
+
+
+def test_stream_dedup_equals_batch_distinct(spark, src_dir):
+    """Streaming exact dedup emits every distinct msg_key exactly once: the
+    drained rows equal SELECT DISTINCT msg_key over the same files."""
+    out = [r["msg_key"] for r in run_stream_dedup_once(
+        spark, src_dir, query_name="t_stream_dedup").collect()]
+    with_parsed(spark.read.parquet(src_dir)).createOrReplaceTempView("t_dedup_batch")
+    want = {r["msg_key"] for r in spark.sql("SELECT DISTINCT msg_key FROM t_dedup_batch").collect()}
+    assert len(out) == len(set(out))
+    assert set(out) == want
+
+
+def test_drain_restores_shuffle_partitions(spark, src_dir, tmp_path):
+    """The state-partition pin binds the stream at start and the session
+    value comes back both after a normal start and when .start() raises."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    ckpt = tmp_path / "ckpt"
+    run_stream_once(
+        spark, src_dir, query_name="t_pin_ok", checkpoint_dir=str(ckpt), state_partitions=3
+    )
+    assert spark.conf.get(key) == before
+    # the stream recorded the pinned value in its first offset-log entry
+    meta = json.loads((ckpt / "t_pin_ok" / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"][key] == "3"
+    # complete mode needs an aggregation: .start() rejects this plan
+    with pytest.raises(AnalysisException):
+        drain(
+            stream_source(spark, src_dir).select("conv_id"),
+            "t_pin_bad", "complete", state_partitions=5,
+        )
+    assert spark.conf.get(key) == before
 
 
 def test_stream_session_windows_equals_batch(spark, tmp_path_factory):

@@ -1,7 +1,7 @@
 """Expression-based parse/projection stage (the JVM fast path).
 
 Lifts a raw text column into the engine's parsed columns using only built-in
-Catalyst expressions (``regexp_extract``, ``get_json_object``, ``split`` — all
+Catalyst expressions (``regexp_extract``, ``json_tuple``, ``split`` — all
 whole-stage-codegen'd), so the hot path never leaves the JVM. The vectorized
 pandas-UDF twin lives in :mod:`timberjack_spark.functions.grok`; a pytest pins
 the two to identical output.
@@ -39,17 +39,6 @@ MODES = ("generic", "json", "auto")
 def _json_path(key: str) -> str:
     # bracket syntax survives keys like "@timestamp"
     return f"$['{key}']" if not key.replace("_", "").replace(".", "").isalnum() else f"$.{key}"
-
-
-def json_first(text: Column, keys: list[str]) -> Column:
-    """First-present-key JSON lookup (null when none / malformed JSON).
-
-    The lookup parses the ws-TRIMMED text: the reference trims (Rust
-    str::trim) before serde-parsing, and Jackson rejects JSON framed by
-    non-JSON whitespace (NBSP etc.) that ws_trim strips — parity pinned by
-    the grok/extract edge test and the fuzzer."""
-    t = ws_trim(text)
-    return F.coalesce(*[F.get_json_object(t, _json_path(k)) for k in keys])
 
 
 # Unicode White_Space — the exact set Rust's str::trim (the reference,
@@ -118,80 +107,66 @@ def is_jsonish(text: Column) -> Column:
     return t.startswith("{") & t.endswith("}")
 
 
-def parsed_columns(text: Column, mode: str = "auto") -> dict[str, Column]:
-    """The engine's parse projection: level, ts_raw, bucket, message, error_type, msg_key."""
-    if mode not in MODES:
-        raise ValueError(f"mode must be one of {MODES}")
-    g_level, g_ts = generic_level(text), generic_timestamp(text)
-    j_level = json_first(text, JSON_LEVEL_KEYS)
-    j_ts = json_first(text, JSON_TIMESTAMP_KEYS)
-    j_msg = json_first(text, JSON_MESSAGE_KEYS)
-
-    if mode == "generic":
-        level, ts_raw, message = g_level, g_ts, text
-    else:
-        use_json = F.lit(True) if mode == "json" else is_jsonish(text)
-        # analyzer.rs:230-245: parser level, else generic regex on the raw line.
-        level = F.when(use_json & j_level.isNotNull(), j_level).otherwise(g_level)
-        # analyzer.rs:274-281: parser ts, else generic regex on the raw line.
-        ts_raw = F.when(use_json & j_ts.isNotNull(), j_ts).otherwise(g_ts)
-        message = F.when(use_json & j_msg.isNotNull(), j_msg).otherwise(text)
-
-    bucket = F.substring(ts_raw, 1, BUCKET_LEN)
-    return {
-        "level": level,
-        "ts_raw": ts_raw,
-        "bucket": bucket,
-        "message": message,
-        "error_type": error_type(text),
-        "msg_key": message_key(text),
-    }
-
-
 def with_parsed(df: DataFrame, text_col: str = "text", mode: str = "auto") -> DataFrame:
-    """Append the parse projection to ``df``.
+    """Append the parse projection to ``df``: level, ts_raw, bucket, message,
+    error_type, msg_key.
 
     For the JSON-capable modes the 15 candidate keys are extracted with ONE
     ``json_tuple`` (a single Jackson parse per row) instead of 15
     ``get_json_object`` calls — the dominant cost of the parse stage on
-    JSON-heavy corpora. The rest is a single codegen projection, zero shuffles.
+    JSON-heavy corpora. Generic mode parses no JSON at all. The rest is a
+    single codegen projection, zero shuffles.
     """
-    if mode == "generic":
-        return df.withColumns(parsed_columns(F.col(text_col), mode))
-
-    jt, cols, aliases = _json_parse_exprs(text_col, mode)
+    jt, cols, aliases = _parse_exprs(text_col, mode)
+    if jt is None:
+        return df.withColumns(cols)
     return df.select("*", jt).withColumns(cols).drop(*aliases)
 
 
 @lru_cache(maxsize=8)
-def _json_parse_exprs(text_col: str, mode: str):
-    """Expression trees for the json/auto parse projection, built once per
+def _parse_exprs(text_col: str, mode: str):
+    """Expression trees for the parse projection, built once per
     (text_col, mode) and reused across queries: Column objects are unresolved
     expressions bound to the process-wide py4j gateway (not a session), and
     constructing this tree costs hundreds of py4j round-trips — measurable
-    driver-side serial time (~0.2 s) on every run of a parse query."""
-    keys = JSON_LEVEL_KEYS + JSON_TIMESTAMP_KEYS + JSON_MESSAGE_KEYS
-    aliases = tuple(f"_j{i}" for i in range(len(keys)))
-    # parse the TRIMMED text (see json_first: reference trims before serde).
-    # In auto mode the json_tuple INPUT is additionally gated on is_jsonish:
-    # its outputs are only ever consumed under `use_json` anyway, and a null
-    # input skips the Jackson parse attempt entirely — on a 7.7%-JSON corpus
-    # the JSON stage measured 8-13 s ungated vs 2.5 s gated per 24M rows
-    # (Jackson charges for every failed parse of a generic line).
-    text = F.col(text_col)
-    jt_input = ws_trim(text) if mode == "json" else F.when(is_jsonish(text), ws_trim(text))
-    jt = F.json_tuple(jt_input, *keys).alias(*aliases)
+    driver-side serial time (~0.2 s) on every run of a parse query.
 
-    def first(kset: list[str]) -> Column:
-        return F.coalesce(*[F.col(aliases[keys.index(k)]) for k in kset])
-
+    Returns ``(jt, cols, aliases)``: the ``json_tuple`` generator and its
+    output column names (None and () in generic mode), and the parsed
+    columns by name."""
+    if mode not in MODES:
+        raise ValueError(f"mode must be one of {MODES}")
     text = F.col(text_col)
     g_level, g_ts = generic_level(text), generic_timestamp(text)
-    j_level, j_ts, j_msg = first(JSON_LEVEL_KEYS), first(JSON_TIMESTAMP_KEYS), first(JSON_MESSAGE_KEYS)
-    use_json = F.lit(True) if mode == "json" else is_jsonish(text)
-    level = F.when(use_json & j_level.isNotNull(), j_level).otherwise(g_level)
-    ts_raw = F.when(use_json & j_ts.isNotNull(), j_ts).otherwise(g_ts)
-    message = F.when(use_json & j_msg.isNotNull(), j_msg).otherwise(text)
+    if mode == "generic":
+        jt, aliases = None, ()
+        level, ts_raw, message = g_level, g_ts, text
+    else:
+        keys = JSON_LEVEL_KEYS + JSON_TIMESTAMP_KEYS + JSON_MESSAGE_KEYS
+        aliases = tuple(f"_j{i}" for i in range(len(keys)))
+        # parse the ws-TRIMMED text: the reference trims (Rust str::trim)
+        # before serde-parsing, and Jackson rejects JSON framed by non-JSON
+        # whitespace (NBSP etc.) that ws_trim strips — parity pinned by the
+        # grok/extract edge test and the fuzzer.
+        # In auto mode the json_tuple INPUT is additionally gated on is_jsonish:
+        # its outputs are only ever consumed under `use_json` anyway, and a null
+        # input skips the Jackson parse attempt entirely — on a 7.7%-JSON corpus
+        # the JSON stage measured 8-13 s ungated vs 2.5 s gated per 24M rows
+        # (Jackson charges for every failed parse of a generic line).
+        jt_input = ws_trim(text) if mode == "json" else F.when(is_jsonish(text), ws_trim(text))
+        jt = F.json_tuple(jt_input, *keys).alias(*aliases)
+
+        def first(kset: list[str]) -> Column:
+            return F.coalesce(*[F.col(aliases[keys.index(k)]) for k in kset])
+
+        j_level, j_ts = first(JSON_LEVEL_KEYS), first(JSON_TIMESTAMP_KEYS)
+        j_msg = first(JSON_MESSAGE_KEYS)
+        use_json = F.lit(True) if mode == "json" else is_jsonish(text)
+        # analyzer.rs:230-245 / 274-281: parser value, else generic regex on
+        # the raw line
+        level = F.when(use_json & j_level.isNotNull(), j_level).otherwise(g_level)
+        ts_raw = F.when(use_json & j_ts.isNotNull(), j_ts).otherwise(g_ts)
+        message = F.when(use_json & j_msg.isNotNull(), j_msg).otherwise(text)
     cols = {
         "level": level,
         "ts_raw": ts_raw,

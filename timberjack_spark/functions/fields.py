@@ -84,7 +84,7 @@ def _gated(text: Column) -> Column:
 
     The Arrow UDF is still invoked over every row (Catalyst extracts Python
     UDFs out of CASE WHEN), but a null input transfers ~0 bytes over Arrow and
-    short-circuits in Python — exactly the gating `_json_parse_exprs` applies
+    short-circuits in Python — exactly the gating `_parse_exprs` applies
     to `json_tuple` (extract.py). `is_jsonish` (ws-trimmed brace framing) is
     the UDF's own early-return condition, so results are identical; on the
     ~8%-JSON fixture corpus this cuts the Arrow transfer and Python work ~12x

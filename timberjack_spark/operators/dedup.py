@@ -482,13 +482,18 @@ def connected_components(
     appears in its own self-loop, so the old left-join's
     no-neighbour coalesce case cannot occur.
     """
-    # materialize the symmetrized edge table ONCE: every round's propagate
-    # join references it, and without the checkpoint each round re-executes
-    # the whole upstream pair pipeline (for near_dup_clusters that is the
-    # LSH candidate generation + exact-Jaccard verify, re-run ~2x per round —
+    # the edge table is materialized TWICE, and the upstream pair pipeline
+    # runs once. Without a checkpoint every round's propagate join would
+    # re-execute that pipeline (for near_dup_clusters that is the LSH
+    # candidate generation + exact-Jaccard verify, re-run ~2x per round —
     # the dominant cost of d_dedup_clusters in r5, measured ~7 re-executions
-    # over a 3-round graph). Edge-endpoint-subgraph-sized, so the
-    # materialization is tiny at any scale.
+    # over a 3-round graph). Checkpoint 1 (here, lazy) pins the symmetrized
+    # edges: both the node list below and the self-loop union read them, so
+    # the pipeline runs once, inside the eager ``labels`` job. Checkpoint 2
+    # (the self-loop union below, lazy) pins its 2|E| + |V| rows during
+    # round 1, so later rounds scan one RDD instead of re-running the union
+    # over two. Edge-endpoint-subgraph-sized, so both copies are tiny at
+    # any scale.
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
@@ -501,7 +506,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # self-loops ride the edge table (see docstring): |V| extra rows next to
-    # 2|E|, checkpointed once alongside sym so rounds union two RDD scans
+    # 2|E|; checkpoint 2 of the edge table (see above)
     sym = sym.unionByName(
         labels.select(F.col("nid").alias("a"), F.col("nid").alias("b"))
     ).localCheckpoint(eager=False)

@@ -24,7 +24,7 @@ from ..functions.patterns import (  # noqa: F401 — WS_CLASS re-exported for or
 def _json_first_sql(col: str, keys: list[str]) -> str:
     # try_cast(.. AS JSON) nulls out malformed JSON instead of erroring — DuckDB
     # evaluates json functions eagerly even under CASE guards. The cast takes
-    # the ws-TRIMMED text (twin of extract.json_first: the engine parses
+    # the ws-TRIMMED text (twin of extract._parse_exprs: the engine parses
     # trimmed, because Jackson/serde reject NBSP-framed JSON).
     t = _ws_trim_sql(col)
     parts = ", ".join(f"json_extract_string(try_cast({t} AS JSON), '$.{k}')" for k in keys)

@@ -15,11 +15,6 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _g1_region_opt() -> str:
-    region = os.environ.get("SPARK_GRAFT_G1_REGION", "32m")
-    return f"-XX:G1HeapRegionSize={region}" if region else ""
-
-
 def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
@@ -47,13 +42,12 @@ def get_spark(
         f"-XX:CICompilerCount=4 "
         # 32m G1 regions: the parse stage allocates many multi-MB humongous
         # buffers; bigger regions cut full-box (32-thread) flagship cpu-work
-        # ~10% on this box (tools/tune_fullbox.py: 434 -> 386 cpu-s, same
-        # noise window; UseParallelGC measured far WORSE, 567). Env-overridable
-        # so the tuning lab can still measure the untuned baseline ("" = omit).
-        + _g1_region_opt()
-        + " "
-        # experiment hook (tools/tune_fullbox.py): extra JVM flags appended at
-        # gateway launch — a no-op for every later getOrCreate in the process
+        # ~10% on a 32-core box (434 -> 386 cpu-s, same noise window;
+        # UseParallelGC measured far WORSE, 567).
+        "-XX:G1HeapRegionSize=32m "
+        # SPARK_GRAFT_EXTRA_JAVA: extra JVM flags appended at gateway launch
+        # (perfbench/run.py pins heap and tmpdir this way) — a no-op for
+        # every later getOrCreate in the process
         + os.environ.get("SPARK_GRAFT_EXTRA_JAVA", "")
     ).strip()
     builder = (
@@ -77,13 +71,13 @@ def get_spark(
         # 16m locally: test/bench files are tens of MB and must still split into
         # enough tasks to exercise all cores; on a real cluster reading 100 TB
         # you would leave this at the 128m default (fewer, fuller tasks).
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         # Spark floors each file split at openCostInBytes (default 4m): a
         # single 15 MB fixture file then scans as FOUR tasks on a 32-core
         # box and every parse-stage query runs at 1/8 utilization (measured:
         # sf0.1 full parse 3.2 s -> 1.2 s at 512k / 29 splits). At cluster
         # scale bytes-per-core dwarfs this floor, so the override is inert.
-        .config("spark.sql.files.openCostInBytes", os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "524288"))
+        .config("spark.sql.files.openCostInBytes", "524288")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

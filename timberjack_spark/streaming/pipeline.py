@@ -1,10 +1,19 @@
 """Structured Streaming flavor of the parse -> route -> aggregate pipeline.
 
-The reference's stdin loop (/root/reference/src/main.rs:218-297) is a
-single-threaded line stream; the Spark-native analog is the SAME DataFrame
-program bound to ``readStream`` — one logic, two execution modes. Late data is
-handled with a watermark on ``ts``; windowed level counts mirror the batch
-trend histogram (A4) under event-time semantics.
+The reference's stdin loop (src/main.rs:218-297) is a single-threaded line
+stream; the Spark-native analog is the SAME DataFrame program bound to
+``readStream`` — one logic, two execution modes. Late data is handled with a
+watermark on ``ts``; windowed level counts mirror the batch trend histogram
+(A4) under event-time semantics.
+
+Seven stages, one drain. Every ``run_*_once`` builds its plan over
+``stream_source`` and hands it to ``drain``, the single availableNow ->
+memory-sink tail (checkpoint dir, state-partition pin, ``spark.table``
+result). A stage keeps only what is its own: the plan, its output mode, its
+state-partition value and any static side it materializes first. The stages:
+windowed level counts, stateful conversation stats, session windows, exact
+dedup, decontamination, quality gate and ingestion novelty filter — each
+pinned stream == batch.
 
 ``conv_session_stats`` demonstrates a custom stateful operator
 (``applyInPandasWithState``): per-conversation running statistics with a
@@ -39,18 +48,24 @@ TRANSCRIPT_SCHEMA = T.StructType(
 
 
 def stream_source(
-    spark: SparkSession, src_dir: str, max_files: int | None = None
+    spark: SparkSession,
+    src_dir: str,
+    max_files: int | None = None,
+    schema: T.StructType = TRANSCRIPT_SCHEMA,
 ) -> DataFrame:
-    """File-stream source over a transcript parquet directory (the sandbox
-    stand-in for a Kafka/Iceberg-changelog source).
+    """File-stream source over a parquet directory of ``schema`` rows (the
+    sandbox stand-in for a Kafka/Iceberg-changelog source): transcripts by
+    default, ``EVENTS_SCHEMA`` / ``DOCS_SCHEMA`` for the other stages.
 
     ``max_files`` bounds files per micro-batch — set it for continuous
     deployments where per-batch latency matters. Leave None for bounded
     availableNow drains: a cap there only serializes the drain into many
     micro-batches (measured: 128 files / cap 4 = 32 sequential batches, 3x the
-    wall time) with zero correctness benefit.
+    wall time) with zero correctness benefit. The one exception is
+    run_stream_session_windows_once, which caps on purpose to force the
+    cross-batch session merge.
     """
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    reader = spark.readStream.schema(schema)
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
     return reader.parquet(src_dir)
@@ -77,33 +92,47 @@ def windowed_level_counts(
     )
 
 
+def drain(
+    df: DataFrame,
+    query_name: str,
+    output_mode: str,
+    checkpoint_dir: str | None = None,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Run the streaming plan ``df`` to completion with an availableNow
+    trigger into a memory sink named ``query_name`` and return that table.
 
-def _with_stream_shuffle(spark: SparkSession, state_partitions: int | None):
-    """Context manager: pin spark.sql.shuffle.partitions for a stream start.
-
-    Streaming state lives in one store instance PER shuffle partition, and a
-    bounded drain pays that instance setup every run: the sf0.1 windowed
-    drain measured 9.7 s at 64 partitions vs 2.0 s at 16 (identical result).
-    Size state partitions to the stateful operator's key volume, not to the
-    batch session's scan parallelism — at cluster scale you would RAISE this
-    (one instance per executor core), here the default 16 fits drain-sized
-    state. The conf is restored after .start(): the stream binds it at start.
+    The checkpoint lives under ``checkpoint_dir/query_name`` (a fresh temp
+    dir when None). ``state_partitions`` pins spark.sql.shuffle.partitions
+    for the start only: the stream binds it at start, and the session value
+    is restored in a ``finally`` even when ``.start()`` raises. Streaming
+    state lives in one store instance PER shuffle partition, and a bounded
+    drain pays that instance setup every run: the sf0.1 windowed drain
+    measured 9.7 s at 64 partitions vs 2.0 s at 16 (identical result). Size
+    state partitions to the stateful operator's key volume, not to the batch
+    session's scan parallelism — at cluster scale you would RAISE this (one
+    instance per executor core); the stateful stages' default 16 fits
+    drain-sized state. None leaves the session value in force, which is what
+    the stateless stages want.
     """
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        if state_partitions is None:
-            yield
-            return
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark = df.sparkSession
+    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_stream_ckpt_")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return cm()
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+    return spark.table(query_name)
 
 
 def run_stream_once(
@@ -115,20 +144,11 @@ def run_stream_once(
 ) -> DataFrame:
     """Drain the source with an availableNow trigger into a memory sink and
     return the result table — used to pin stream==batch equivalence in tests.
-    ``state_partitions`` sizes the stateful stage (see _with_stream_shuffle)."""
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_stream_ckpt_")
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            windowed_level_counts(routed_stream(stream_source(spark, src_dir)))
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    ``state_partitions`` sizes the stateful stage (see drain)."""
+    return drain(
+        windowed_level_counts(routed_stream(stream_source(spark, src_dir))),
+        query_name, "complete", checkpoint_dir, state_partitions,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -226,27 +246,16 @@ def run_session_stats_once(
     checkpoint_dir: str | None = None,
     state_partitions: int | None = 16,
 ) -> DataFrame:
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_sess_ckpt_")
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            conv_session_stats(routed_stream(stream_source(spark, src_dir)))
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(
+        conv_session_stats(routed_stream(stream_source(spark, src_dir))),
+        query_name, "update", checkpoint_dir, state_partitions,
+    )
 
 
 # ---------------------------------------------------------------------------
 # streaming session windows — the F.session_window aggregation from the batch
 # q_session_windows, run under the streaming engine. The API is shared between
-# batch and streaming by construction; this drain completes the stream==batch
-# contract for the session-window stage (the other streaming stages: windowed
-# counts, stateful conv stats, exact dedup).
+# batch and streaming, so both modes run one program.
 # ---------------------------------------------------------------------------
 
 EVENTS_SCHEMA = T.StructType(
@@ -302,23 +311,10 @@ def run_stream_session_windows_once(
     operator exists to exercise — would never run. The events fixture is tiny,
     so the serialized batches cost milliseconds.
     """
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_sesswin_ckpt_")
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(events_path)
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            session_windows_agg(src, gap=gap)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    src = stream_source(spark, events_path, max_files_per_trigger, EVENTS_SCHEMA)
+    return drain(
+        session_windows_agg(src, gap=gap), query_name, "complete", checkpoint_dir, state_partitions
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -340,23 +336,12 @@ def run_stream_dedup_once(
     """Drain the source, emitting each distinct parsed message template
     (msg_key) exactly once. Dedup on the template, not the raw line: raw log
     lines are near-unique (timestamps), templates are the dedup unit."""
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_dedup_ckpt_")
     deduped = (
         routed_stream(stream_source(spark, src_dir))
         .select("msg_key")
         .dropDuplicates(["msg_key"])
     )
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(deduped, query_name, "append", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -414,7 +399,6 @@ def run_stream_decontam_once(
     """
     from ..operators.dedup import make_grams_udf
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_decontam_ckpt_")
     # materialize the static side ONCE before the stream starts: a
     # stream-static join re-evaluates the static plan per micro-batch, and
     # the eval gram build (interpreted shingle expressions + distinct) is the
@@ -435,7 +419,7 @@ def run_stream_decontam_once(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_path)
+    src = stream_source(spark, docs_path, schema=DOCS_SCHEMA)
     # stream-side repartition BEFORE the gram explode: a 4-file micro-batch
     # scans as 4 tasks and the interpreted shingle expressions would run at
     # 1/8 utilization — the streaming analog of _ensure_parallelism (at real
@@ -450,17 +434,7 @@ def run_stream_decontam_once(
         .select("doc_id")
         .dropDuplicates(["doc_id"])
     )
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            contaminated.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(contaminated, query_name, "append", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -490,19 +464,9 @@ def run_stream_quality_once(
     of _ensure_parallelism — a small micro-batch scans as few tasks)."""
     from ..functions.text import quality_filter
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_quality_ckpt_")
-    src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_path)
+    src = stream_source(spark, docs_path, schema=DOCS_SCHEMA)
     gated = quality_filter(src.repartition(spark.sparkContext.defaultParallelism))
-    q = (
-        gated.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(gated, query_name, "append", checkpoint_dir)
 
 
 def run_stream_ingest_dedup_once(
@@ -539,25 +503,15 @@ def run_stream_ingest_dedup_once(
     plan every micro-batch), and only 16-byte hashes broadcast — never
     history text.
     """
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_ingest_ckpt_")
     hist = (
         history_df.select(F.md5("text").alias("_h"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_path)
+    src = stream_source(spark, docs_path, schema=DOCS_SCHEMA)
     accepted = (
         src.select("doc_id", F.md5("text").alias("_h"))
         .join(F.broadcast(hist), "_h", "left_anti")
         .select("doc_id")
     )
-    q = (
-        accepted.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(accepted, query_name, "append", checkpoint_dir)
