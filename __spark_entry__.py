@@ -970,21 +970,14 @@ def _q_stream_level_counts(spark, sf_dir):
 
 
 def _q_stream_conv_sessions(spark, sf_dir):
-    """applyInPandasWithState conversation stats, drained and reduced to final
-    state per conversation — oracle is plain batch SQL."""
+    """Streaming conversation stats (native update-mode aggregate), drained
+    and reduced to final state per conversation — oracle is plain batch SQL."""
     from timberjack_spark.fixtures import transcripts_stream_dir
     from timberjack_spark.streaming.pipeline import run_session_stats_once
 
     _STREAM_SEQ[0] += 1
     out = run_session_stats_once(
-        spark,
-        transcripts_stream_dir(sf_dir),
-        query_name=f"q_stream_sess_{_STREAM_SEQ[0]}",
-        # one state-store instance per core (the cluster-scale sizing the
-        # pipeline docstring prescribes); measured 5.3 -> 4.8 s at sf0.1 vs
-        # the drain default 16 — this stage's wall is per-group python time,
-        # which parallelizes with state partitions
-        state_partitions=spark.sparkContext.defaultParallelism,
+        spark, transcripts_stream_dir(sf_dir), query_name=f"q_stream_sess_{_STREAM_SEQ[0]}"
     )
     return out.groupBy("conv_id").agg(
         F.max("n_turns").alias("n_turns"),

@@ -10,7 +10,9 @@ from timberjack_spark.fixtures import transcripts_df
 from timberjack_spark.functions.extract import with_parsed
 from timberjack_spark.operators.route import with_category
 from timberjack_spark.streaming.pipeline import (
+    conv_session_stats,
     drain,
+    routed_stream,
     run_session_stats_once,
     run_stream_dedup_once,
     run_stream_once,
@@ -131,25 +133,85 @@ def test_stream_session_windows_equals_batch(spark, tmp_path_factory):
     assert sorted(got.values()) == [200, 200, 200]
 
 
-def test_stateful_session_stats(spark, src_dir):
-    out = run_session_stats_once(spark, src_dir, query_name="t_sessions")
-    # memory sink in update mode may carry one row per trigger; take the last
-    # update per conversation (max n_turns is monotonically the latest)
-    rows = out.groupBy("conv_id").agg(
-        F.max("n_turns").alias("n_turns"), F.max("n_errors").alias("n_errors")
-    )
-    got = {r["conv_id"]: (r["n_turns"], r["n_errors"]) for r in rows.collect()}
-    batch = with_category(with_parsed(spark.read.parquet(src_dir)))
-    expected = {
-        r["conv_id"]: (r["n_turns"], r["n_errors"])
+def _batch_session_stats(df):
+    """The batch oracle: conv_id -> (n_turns, n_errors, last_turn_idx)."""
+    batch = with_category(with_parsed(df))
+    return {
+        r["conv_id"]: (r["n_turns"], r["n_errors"], r["last_turn_idx"])
         for r in batch.groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.sum((F.col("category") == "errors").cast("long")).alias("n_errors"),
+            F.max("turn_idx").cast("long").alias("last_turn_idx"),
         )
         .collect()
     }
-    assert got == expected
+
+
+def _final_session_stats(out):
+    """Update mode emits a row per conversation per micro-batch that touched
+    it; the totals only grow, so the latest row is the largest tuple."""
+    last = {}
+    for r in out.collect():
+        cur = (r["n_turns"], r["n_errors"], r["last_turn_idx"])
+        last[r["conv_id"]] = max(cur, last.get(r["conv_id"], cur))
+    return last
+
+
+def test_stateful_session_stats(spark, src_dir, capsys):
+    expected = _batch_session_stats(spark.read.parquet(src_dir))
+    single = run_session_stats_once(spark, src_dir, query_name="t_sessions")
+    assert _final_session_stats(single) == expected
+
+    # 8 files at 2 per trigger: four micro-batches, so every conversation's
+    # totals are carried across batches in the state store
+    parsed = routed_stream(stream_source(spark, src_dir, max_files=2))
+    multi = drain(conv_session_stats(parsed), "t_sessions_multi", "update")
+    assert multi.count() > len(expected)  # conversations re-emitted by later batches
+    assert _final_session_stats(multi) == expected
+
+    # native aggregate: map-side partial aggregation below the state
+    # exchange, and no Python operator anywhere in the plan
+    conv_session_stats(parsed).explain()
+    plan = capsys.readouterr().out
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "StateStoreSave" in plan
+    below_exchange = plan[plan.index("Exchange hashpartitioning(conv_id"):]
+    assert "HashAggregate(keys=[conv_id" in below_exchange
+    assert "partial_count(1)" in below_exchange
+
+
+def test_session_stats_null_text(spark, tmp_path):
+    """Null text parses to a null error flag; it counts as a turn and never as
+    an error, so an all-null conversation reports n_errors 0, not NULL."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = {
+        "conv-a": ["2024-01-01 00:00:00,000 [ERROR] disk full", None, "hello there"],
+        "conv-b": [None, None],
+    }
+    rows = [(c, i, t) for c, ts in texts.items() for i, t in enumerate(ts)]
+    pq.write_table(
+        pa.table(
+            {
+                "conv_id": pa.array([r[0] for r in rows]),
+                "turn_idx": pa.array([r[1] for r in rows], pa.int32()),
+                "role": pa.array(["user"] * len(rows)),
+                "text": pa.array([r[2] for r in rows], pa.string()),
+                "tool": pa.array([""] * len(rows)),
+                "ts": pa.array([dt.datetime(2024, 1, 1)] * len(rows), pa.timestamp("us")),
+            }
+        ),
+        str(tmp_path / "part-0.parquet"),
+    )
+    got = _final_session_stats(
+        run_session_stats_once(spark, str(tmp_path), query_name="t_sessions_null")
+    )
+    assert got == _batch_session_stats(spark.read.parquet(str(tmp_path)))
+    assert got == {"conv-a": (3, 1, 2), "conv-b": (2, 0, 1)}
 
 
 def test_stream_decontam_equals_batch(spark, tmp_path_factory):

@@ -8,17 +8,17 @@ watermark on ``ts``; windowed level counts mirror the batch trend histogram
 
 Seven stages, one drain. Every ``run_*_once`` builds its plan over
 ``stream_source`` and hands it to ``drain``, the single availableNow ->
-memory-sink tail (checkpoint dir, state-partition pin, ``spark.table``
-result). A stage keeps only what is its own: the plan, its output mode, its
-state-partition value and any static side it materializes first. The stages:
+memory-sink tail (checkpoint dir, one state-store instance per core,
+``spark.table`` result). A stage keeps only what is its own: the plan, its
+output mode and any static side it materializes first. The stages:
 windowed level counts, stateful conversation stats, session windows, exact
 dedup, decontamination, quality gate and ingestion novelty filter — each
 pinned stream == batch.
 
-``conv_session_stats`` demonstrates a custom stateful operator
-(``applyInPandasWithState``): per-conversation running statistics with a
-processing-time timeout that flushes idle conversations — the streaming
-equivalent of the per-conversation aggregates.
+``conv_session_stats`` keeps per-conversation running statistics as a
+native streaming aggregate in update mode: count / sum / max pre-aggregate
+in every map task, so no row crosses a Python or Arrow boundary and a hot
+conversation crosses the shuffle as one partial row per task.
 """
 
 from __future__ import annotations
@@ -26,14 +26,12 @@ from __future__ import annotations
 import os
 import tempfile
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.extract import with_parsed
-from ..operators.route import with_category
+from ..operators.route import errors_pred, with_category
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -105,21 +103,26 @@ def drain(
     The checkpoint lives under ``checkpoint_dir/query_name`` (a fresh temp
     dir when None). ``state_partitions`` pins spark.sql.shuffle.partitions
     for the start only: the stream binds it at start, and the session value
-    is restored in a ``finally`` even when ``.start()`` raises. Streaming
-    state lives in one store instance PER shuffle partition, and a bounded
-    drain pays that instance setup every run: the sf0.1 windowed drain
-    measured 9.7 s at 64 partitions vs 2.0 s at 16 (identical result). Size
-    state partitions to the stateful operator's key volume, not to the batch
-    session's scan parallelism — at cluster scale you would RAISE this (one
-    instance per executor core); the stateful stages' default 16 fits
-    drain-sized state. None leaves the session value in force, which is what
-    the stateless stages want.
+    is restored in a ``finally`` even when ``.start()`` raises.
+
+    Streaming state lives in one store instance PER shuffle partition, and a
+    bounded drain pays every instance's load and commit on every micro-batch,
+    so the rule is one instance per core: None resolves to
+    ``defaultParallelism``. More instances than cores only queue up more
+    load/commit cycles (the sf0.1 windowed drain measured 9.7 s at 64
+    partitions vs 2.0 s at 16); fewer leave cores idle. On 4 cores the
+    windowed-counts plus conversation-stats drains over the perfbench
+    ``stream_state`` input (25,600 turns) took 4.26 s at a fixed 16 and
+    2.56 s at 4 while the conversation stats were a Python operator, and
+    1.59 s at 4 as the native aggregate (medians of 6). A stateless stage
+    has no store, so the pin is inert there.
     """
     spark = df.sparkSession
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_stream_ckpt_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    if state_partitions is None:
+        state_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = (
             df.writeStream.format("memory")
@@ -140,7 +143,7 @@ def run_stream_once(
     src_dir: str,
     query_name: str = "stream_levels",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 16,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain the source with an availableNow trigger into a memory sink and
     return the result table — used to pin stream==batch equivalence in tests.
@@ -152,90 +155,31 @@ def run_stream_once(
 
 
 # ---------------------------------------------------------------------------
-# custom stateful operator
+# per-conversation running stats
 # ---------------------------------------------------------------------------
 
-SESSION_STATE_SCHEMA = "n_turns LONG, n_errors LONG, last_turn_idx LONG"
-SESSION_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_errors", T.LongType()),
-        T.StructField("last_turn_idx", T.LongType()),
-    ]
-)
 
+def conv_session_stats(parsed: DataFrame) -> DataFrame:
+    """Per-conversation running stats (n_turns, n_errors, last_turn_idx) as a
+    native streaming aggregation in update mode: each micro-batch emits the
+    conversations it touched with their totals so far.
 
-def _make_update_fn(idle_timeout_ms: int | None):
-    def update(key, pdfs, state: GroupState):
-        (conv_id,) = key
-        if state.hasTimedOut:
-            # idle conversation: flush final stats and drop the state —
-            # crucially do NOT re-arm the timeout, or an availableNow drain
-            # would keep scheduling empty batches forever
-            n_turns, n_errors, last_idx = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {"conv_id": [conv_id], "n_turns": [n_turns],
-                 "n_errors": [n_errors], "last_turn_idx": [last_idx]}
-            )
-            return
-        n_turns, n_errors, last_idx = state.get if state.exists else (0, 0, -1)
-        for pdf in pdfs:
-            n_turns += len(pdf)
-            # _is_err is precomputed JVM-side (see conv_session_stats): the
-            # python side sums a small int column instead of string-comparing
-            # every category value per group — per-group time is the cost
-            # driver of this stage (thousands of groups cross the boundary)
-            n_errors += int(pdf["_is_err"].to_numpy().sum())
-            if len(pdf):
-                last_idx = max(last_idx, int(pdf["turn_idx"].to_numpy().max()))
-        state.update((n_turns, n_errors, last_idx))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {"conv_id": [conv_id], "n_turns": [n_turns],
-             "n_errors": [n_errors], "last_turn_idx": [last_idx]}
-        )
+    count / sum / max are algebraic, so Spark pre-aggregates every map task
+    before the shuffle (a hot conversation crosses the exchange as one
+    partial row per task) and the state store holds one row per conversation
+    — no Python worker, no Arrow boundary.
 
-    return update
-
-
-def conv_session_stats(parsed: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
-    """Stateful per-conversation running stats via applyInPandasWithState.
-
-    ``idle_timeout_ms`` enables processing-time timeouts for continuous
-    deployments (flush + evict idle conversations); leave None for bounded
-    drains (availableNow), where a re-armed timeout would prevent termination.
+    ``errors_pred``, not ``category == 'errors'``: identical by the router's
+    first-match contract, and it lets Catalyst prune the rest of the
+    category case-when out of the parse. A null-text turn makes the
+    predicate null where the case-when falls through to a non-error
+    category, so the flag is coalesced to false: such turns count as turns,
+    never as errors, exactly as in the batch groupBy.
     """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    from ..operators.route import errors_pred
-
-    return (
-        parsed.select(
-            "conv_id",
-            "turn_idx",
-            # error flag computed BEFORE the python boundary: ships one small
-            # int instead of the category string and removes the per-group
-            # pandas string compare (guide §4 — pass only what the fn needs).
-            # errors_pred, not category == 'errors': identical by the
-            # router's first-match contract, and it lets Catalyst prune the
-            # whole category case-when (anomaly multi-contains, tool/role
-            # compares) out of the per-row parse.
-            errors_pred().cast("long").alias("_is_err"),
-        )
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _make_update_fn(idle_timeout_ms),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+    return parsed.groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n_turns"),
+        F.sum(F.coalesce(errors_pred(), F.lit(False)).cast("long")).alias("n_errors"),
+        F.max("turn_idx").cast("long").alias("last_turn_idx"),
     )
 
 
@@ -244,7 +188,7 @@ def run_session_stats_once(
     src_dir: str,
     query_name: str = "conv_sessions",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 16,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     return drain(
         conv_session_stats(routed_stream(stream_source(spark, src_dir))),
@@ -292,7 +236,7 @@ def run_stream_session_windows_once(
     query_name: str = "stream_sessions",
     checkpoint_dir: str | None = None,
     gap: str = "30 minutes",
-    state_partitions: int | None = 16,
+    state_partitions: int | None = None,
     max_files_per_trigger: int | None = 2,
 ) -> DataFrame:
     """Drain an events file-stream through the session-window aggregation.
@@ -331,7 +275,7 @@ def run_stream_dedup_once(
     src_dir: str,
     query_name: str = "stream_dedup",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 16,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain the source, emitting each distinct parsed message template
     (msg_key) exactly once. Dedup on the template, not the raw line: raw log
@@ -370,7 +314,7 @@ def run_stream_decontam_once(
     query_name: str = "stream_decontam",
     checkpoint_dir: str | None = None,
     n: int = 8,
-    state_partitions: int | None = 16,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain a document file-stream, emitting each CONTAMINATED doc_id (any
     word n-gram shared with the static eval corpus) exactly once.
