@@ -70,6 +70,11 @@ def test_drain_restores_shuffle_partitions(spark, src_dir, tmp_path):
     # the stream recorded the pinned value in its first offset-log entry
     meta = json.loads((ckpt / "t_pin_ok" / "offsets" / "0").read_text().splitlines()[1])
     assert meta["conf"][key] == "3"
+    # no explicit value: one state-store instance per core
+    run_stream_once(spark, src_dir, query_name="t_pin_default", checkpoint_dir=str(ckpt))
+    assert spark.conf.get(key) == before
+    meta = json.loads((ckpt / "t_pin_default" / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"][key] == str(spark.sparkContext.defaultParallelism)
     # complete mode needs an aggregation: .start() rejects this plan
     with pytest.raises(AnalysisException):
         drain(

@@ -107,15 +107,10 @@ def drain(
 
     Streaming state lives in one store instance PER shuffle partition, and a
     bounded drain pays every instance's load and commit on every micro-batch,
-    so the rule is one instance per core: None resolves to
-    ``defaultParallelism``. More instances than cores only queue up more
-    load/commit cycles (the sf0.1 windowed drain measured 9.7 s at 64
-    partitions vs 2.0 s at 16); fewer leave cores idle. On 4 cores the
-    windowed-counts plus conversation-stats drains over the perfbench
-    ``stream_state`` input (25,600 turns) took 4.26 s at a fixed 16 and
-    2.56 s at 4 while the conversation stats were a Python operator, and
-    1.59 s at 4 as the native aggregate (medians of 6). A stateless stage
-    has no store, so the pin is inert there.
+    so None resolves to ``defaultParallelism``: one instance per core. On a
+    4-core box that beat a fixed 16 for every stateful stage; wider boxes
+    are unmeasured. A stateless stage has no store, so the pin is inert
+    there.
     """
     spark = df.sparkSession
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_stream_ckpt_")
@@ -188,11 +183,10 @@ def run_session_stats_once(
     src_dir: str,
     query_name: str = "conv_sessions",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     return drain(
         conv_session_stats(routed_stream(stream_source(spark, src_dir))),
-        query_name, "update", checkpoint_dir, state_partitions,
+        query_name, "update", checkpoint_dir,
     )
 
 
@@ -236,7 +230,6 @@ def run_stream_session_windows_once(
     query_name: str = "stream_sessions",
     checkpoint_dir: str | None = None,
     gap: str = "30 minutes",
-    state_partitions: int | None = None,
     max_files_per_trigger: int | None = 2,
 ) -> DataFrame:
     """Drain an events file-stream through the session-window aggregation.
@@ -256,9 +249,7 @@ def run_stream_session_windows_once(
     so the serialized batches cost milliseconds.
     """
     src = stream_source(spark, events_path, max_files_per_trigger, EVENTS_SCHEMA)
-    return drain(
-        session_windows_agg(src, gap=gap), query_name, "complete", checkpoint_dir, state_partitions
-    )
+    return drain(session_windows_agg(src, gap=gap), query_name, "complete", checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -275,7 +266,6 @@ def run_stream_dedup_once(
     src_dir: str,
     query_name: str = "stream_dedup",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain the source, emitting each distinct parsed message template
     (msg_key) exactly once. Dedup on the template, not the raw line: raw log
@@ -285,7 +275,7 @@ def run_stream_dedup_once(
         .select("msg_key")
         .dropDuplicates(["msg_key"])
     )
-    return drain(deduped, query_name, "append", checkpoint_dir, state_partitions)
+    return drain(deduped, query_name, "append", checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -314,7 +304,6 @@ def run_stream_decontam_once(
     query_name: str = "stream_decontam",
     checkpoint_dir: str | None = None,
     n: int = 8,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain a document file-stream, emitting each CONTAMINATED doc_id (any
     word n-gram shared with the static eval corpus) exactly once.
@@ -378,7 +367,7 @@ def run_stream_decontam_once(
         .select("doc_id")
         .dropDuplicates(["doc_id"])
     )
-    return drain(contaminated, query_name, "append", checkpoint_dir, state_partitions)
+    return drain(contaminated, query_name, "append", checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
