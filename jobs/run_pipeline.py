@@ -4,7 +4,7 @@ pipeline with resumable checkpointing.
 Cluster usage (north-rule deployment shape):
 
     spark-submit --py-files timberjack_spark.zip jobs/run_pipeline.py \\
-        --input  <parquet/iceberg path of transcripts> \\
+        --input  <transcripts parquet, or text logs> \\
         --output <sink base path> \\
         --buckets 256 --pattern ERROR --level '' --mode auto
 
@@ -43,12 +43,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from timberjack_spark.api import Timber
     from timberjack_spark.fixtures import dim_role_df, dim_tool_df
-    from timberjack_spark.operators.analyze import LogQuery, analyze, collect_report
+    from timberjack_spark.operators.analyze import collect_report
     from timberjack_spark.operators.enrich import enrich
+    from timberjack_spark.operators.filters import parse_field_filters
     from timberjack_spark.operators.route import with_category
     from timberjack_spark.sources.checkpoint import run_resumable_fanout
-    from timberjack_spark.sources.detect import detect_format
 
     if args.local_cores:
         from timberjack_spark.session import get_spark
@@ -58,20 +59,24 @@ def main() -> None:
         spark = SparkSession.builder.appName("timberjack_pipeline").getOrCreate()
 
     t0 = time.time()
-    df = spark.read.parquet(args.input)
-    mode = detect_format(df) if args.mode == "detect" else args.mode
-    q = LogQuery.from_cli(pattern=args.pattern or None, level=args.level or None,
-                          fields=args.field, mode=mode)
+    t = Timber.read(spark, args.input, fmt=args.mode).trend().stats()
+    if args.pattern:
+        t = t.chop(args.pattern)
+    if args.level:
+        t = t.level(args.level)
+    for key, value in parse_field_filters(args.field).items():
+        t = t.field(key, value)
 
-    results = analyze(df, q, cache=True)
+    # one cached spine feeds both the report and the fan-out: one source scan
+    results = t.frames(cache=True)
     routed = with_category(results["matched"])
     enriched = enrich(routed, dim_role_df(spark), dim_tool_df(spark))
     fanout = run_resumable_fanout(enriched, args.output, n_buckets=args.buckets)
-    report = collect_report(results, q)
+    report = collect_report(results, t.q)
     results["matched"].unpersist()
 
     summary = {
-        "mode": mode,
+        "mode": t.q.mode,
         "total_count": report["total_count"],
         "sink_counts": fanout["counts"],
         "buckets_processed": fanout["processed"],

@@ -35,12 +35,12 @@ def test_immutability(spark, corpus):
     _, df = corpus
     base = Timber.over(df)
     a, b = base.chop("ERROR"), base.chop("WARN")
-    assert a.pattern == "ERROR" and b.pattern == "WARN" and base.pattern is None
+    assert a.q.pattern == "ERROR" and b.q.pattern == "WARN" and base.q.pattern is None
 
 
 def test_read_and_detect(spark):
     t = Timber.read(spark, transcripts_path("sf0.001"), fmt="detect")
-    assert t.mode == "generic"  # mixed corpus, ~1/13 JSON
+    assert t.q.mode == "generic"  # mixed corpus, ~1/13 JSON
     assert t.count() == 6000
 
 
@@ -126,6 +126,37 @@ def test_cli_module_json_parity(spark, tmp_path):
     expected = collect_report(analyze(df, q), q)
     assert got == expected
     assert got["total_count"] > 0
+
+
+def test_cli_main_count_and_stdin_detect(spark, corpus, tmp_path, monkeypatch, capsys):
+    """``__main__.main`` in-process: ``--count`` on a file prints
+    ``Timber.count()``, and stdin input resolves ``--format detect`` from its
+    first lines before the query runs."""
+    import io
+    import json as _json
+    import sys
+
+    from timberjack_spark import __main__ as cli
+    from timberjack_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    pdf, _ = corpus
+    log = tmp_path / "count.log"
+    log.write_text("\n".join(pdf["text"]))
+    assert cli.main([str(log), "--count", "--chop", "ERROR", "-f", "service=api"]) == 0
+    want = Timber.read(spark, str(log)).chop("ERROR").field("service", "api").count()
+    assert capsys.readouterr().out.strip() == str(want)
+
+    # half the first ten lines are JSON log lines, so detection picks 'json'
+    js = pdf["text"][pdf.index % 13 == 3].head(20).tolist()
+    plain = pdf["text"][pdf.index % 13 == 0].head(20).tolist()
+    lines = [x for pair in zip(js, plain) for x in pair]
+    monkeypatch.setattr(sys, "stdin", io.StringIO("\n".join(lines) + "\n"))
+    assert cli.main(["--format", "detect", "--stats", "--json"]) == 0
+    got = _json.loads(capsys.readouterr().out)
+    df = spark.createDataFrame([(x,) for x in lines], "text string")
+    assert got == Timber.over(df, fmt="json").stats().report()
+    assert got != Timber.over(df, fmt="generic").stats().report()
 
 
 def test_cli_rejects_declared_formats(tmp_path):

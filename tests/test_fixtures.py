@@ -56,3 +56,35 @@ def test_json_rows_are_valid_json():
     for line in pdf["text"][pd.Series(np.arange(2600)) % 13 == 3]:
         obj = json.loads(line)
         assert {"timestamp", "level", "service", "message"} <= obj.keys()
+
+
+def test_interrupted_fixture_writes_are_regenerated(tmp_path, monkeypatch):
+    """A stream directory without its _SUCCESS marker and a parquet file
+    without its footer are what an interrupted first write leaves behind;
+    both must be rebuilt, not served."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from timberjack_spark import fixtures
+
+    monkeypatch.setattr(fixtures, "FIXTURE_DIR", str(tmp_path))
+    n = fixtures.SF_ROWS["sf0.001"]
+    v = fixtures.FIXTURE_VERSION
+
+    stream = tmp_path / f"transcripts_stream_sf0.001_v{v}"
+    stream.mkdir()
+    pq.write_table(fixtures.transcripts_arrow(n).slice(0, 10), stream / "part-000.parquet")
+    (stream / "part-001.parquet").write_bytes(b"PAR1 truncated")
+    got = fixtures.transcripts_stream_dir("sf0.001")
+    assert os.path.exists(os.path.join(got, "_SUCCESS"))
+    parts = sorted(f for f in os.listdir(got) if f.endswith(".parquet"))
+    assert len(parts) == fixtures.STREAM_PARTS
+    assert sum(pq.read_metadata(os.path.join(got, f)).num_rows for f in parts) == n
+
+    path = tmp_path / f"transcripts_sf0.001_v{v}.parquet"
+    whole = path.with_suffix(".whole")
+    pq.write_table(fixtures.transcripts_arrow(n), whole)
+    path.write_bytes(whole.read_bytes()[: whole.stat().st_size // 2])
+    assert fixtures.transcripts_path("sf0.001") == str(path)
+    assert pq.read_table(path).num_rows == n

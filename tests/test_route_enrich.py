@@ -10,7 +10,7 @@ from timberjack_spark.fixtures import dim_role_df, dim_tool_df, transcripts_pand
 from timberjack_spark.functions.extract import with_parsed
 from timberjack_spark.operators.enrich import enrich
 from timberjack_spark.operators.ordering import salted_count_by, with_turn_order
-from timberjack_spark.operators.route import fan_out_write, sink_counts, with_category
+from timberjack_spark.operators.route import sink_counts, with_category
 from timberjack_spark.sources.checkpoint import completed_buckets, run_resumable_fanout
 
 N = 2600
@@ -46,12 +46,6 @@ def test_sink_counts_match_oracle(routed):
     assert got == expected
     assert sum(got.values()) == N  # every row lands in exactly one sink
     assert set(got) == {"errors", "tool-calls", "anomalies", "dialogue"}  # all sinks non-empty
-
-
-def test_fan_out_write_single_pass(routed, tmp_path):
-    _, df, expected = routed
-    counts = fan_out_write(df.drop("ts"), str(tmp_path))
-    assert counts == expected
 
 
 def test_enrich_broadcast_join_conserves_rows(spark, routed):
@@ -125,3 +119,13 @@ def test_resumable_fanout_exactly_once(spark, routed, tmp_path):
     # ledger carries lineage/metrics per bucket
     rec = next(iter(completed_buckets(base).values()))
     assert {"bucket", "counts", "rows", "elapsed_sec", "completed_at"} <= rec.keys()
+
+
+def test_resumable_fanout_audit_readback(routed, tmp_path):
+    """audit_readback re-reads the written sinks and raises on divergence; a
+    clean run passes it and returns the same counts."""
+    _, df, expected = routed
+    out = run_resumable_fanout(df.drop("ts"), str(tmp_path / "audited"), n_buckets=4,
+                               audit_readback=True)
+    assert sorted(out["processed"]) == [0, 1, 2, 3]
+    assert out["counts"] == expected

@@ -58,7 +58,7 @@ def main(argv: list[str] | None = None) -> int:
         return 1
 
     from .api import Timber
-    from .operators.analyze import LogQuery, analyze, collect_report, render_text
+    from .operators.filters import parse_field_filters
     from .session import get_spark
 
     cores = 1 if args.sequential else None  # None -> all cores (see session.py)
@@ -72,28 +72,19 @@ def main(argv: list[str] | None = None) -> int:
         df = spark.createDataFrame(lines or [("",)], "text string")
         if not lines:
             df = df.limit(0)
-        t = Timber.over(df)
-        if args.format == "detect":
-            from .sources.detect import detect_format
-
-            t = t.format(detect_format(df, "text"))
-        elif args.format != "auto":
-            t = t.format(args.format)
+        t = Timber.over(df, fmt=args.format)
     else:
         if banner:
             print(f"\nWaking LumberJacks...Timberjack is chopping: {args.file}\n")
         t = Timber.read(spark, args.file, fmt=args.format)
 
-    q = LogQuery.from_cli(
-        pattern=args.chop,
-        level=args.level,
-        fields=args.field,
-        mode=t.mode,
-        trends=args.trend,
-        stats=args.stats or args.show_unique,
-        top_errors=args.top_errors,
-        show_unique=args.show_unique,
-    )
+    if args.chop is not None:
+        t = t.chop(args.chop)
+    if args.level is not None:
+        t = t.level(args.level)
+    for key, value in parse_field_filters(args.field).items():
+        t = t.field(key, value)
+    t = t.trend(args.trend).stats(args.stats or args.show_unique, args.top_errors, args.show_unique)
     if banner:
         if args.chop:
             print(f"Searching for pattern: {args.chop}")
@@ -103,16 +94,11 @@ def main(argv: list[str] | None = None) -> int:
             print(f"Filtering by fields: {args.field}")
 
     if args.count:
-        from .operators.analyze import matched
-
-        print(matched(t.df, q, text_col=t.text_col).count())
-        return 0
-
-    doc = collect_report(analyze(t.df, q, text_col=t.text_col), q)
-    if args.json:
-        print(json.dumps(doc, indent=2))
+        print(t.count())
+    elif args.json:
+        print(json.dumps(t.report(), indent=2))
     else:
-        print(render_text(doc))
+        print(t.report_text())
     return 0
 
 

@@ -15,7 +15,7 @@ call (`count`, `report`, `frames`, `route_to`). Reference CLI surface:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -24,34 +24,22 @@ from .operators.analyze import LogQuery, analyze, collect_report, matched, rende
 from .sources.detect import detect_format
 
 
-def _validate_mode(mode: str) -> str:
-    """Fail at the setter, like the reference CLI fails at parse time on an
-    unknown --format (/root/reference/src/main.rs:134-136) — not lazily at the
-    first action."""
-    if mode not in MODES:
-        raise ValueError(f"format must be one of {MODES}, got {mode!r}")
-    return mode
-
-
 @dataclass(frozen=True)
 class Timber:
+    """A source DataFrame plus the one :class:`LogQuery` the setters build.
+
+    Unlike a bare ``LogQuery``, trends and stats start off, as they do in the
+    reference CLI until ``--trend`` / ``--stats`` turn them on."""
+
     df: DataFrame
-    pattern: str | None = None
-    level_filter: str | None = None
-    fields: dict[str, str] = field(default_factory=dict)
-    mode: str = "auto"
-    trends: bool = False
-    stats_on: bool = False
-    top_errors: int = 5
-    show_unique: bool = False
-    use_pandas_grok: bool = False
+    q: LogQuery = LogQuery(trends=False, stats=False)
     text_col: str = "text"
 
     # ---- sources --------------------------------------------------------
     @staticmethod
     def read(spark: SparkSession, path: str, fmt: str | None = None, text_col: str = "text") -> "Timber":
-        """fmt: 'json' | 'generic' | 'auto' | 'detect' (sampled probe, like the
-        reference's automatic detection) | None -> 'auto' (per-row)."""
+        """Text logs (``.log``/``.txt``, gzip/bzip2 included, or a directory
+        of them) or parquet; ``fmt`` as in :meth:`over`."""
         text_suffixes = (
             ".txt", ".log",
             ".txt.gz", ".log.gz", ".txt.bz2", ".log.bz2",  # Hadoop codecs decode transparently
@@ -91,60 +79,55 @@ class Timber:
             if is_text
             else spark.read.parquet(path)
         )
-        t = Timber(df=df, text_col=text_col)
-        if fmt == "detect":
-            return replace(t, mode=detect_format(df, text_col))
-        return replace(t, mode=_validate_mode(fmt or "auto"))
+        return Timber.over(df, text_col, fmt)
 
     @staticmethod
-    def over(df: DataFrame, text_col: str = "text") -> "Timber":
-        return Timber(df=df, text_col=text_col)
+    def over(df: DataFrame, text_col: str = "text", fmt: str | None = None) -> "Timber":
+        """fmt: 'json' | 'generic' | 'auto' | 'detect' (sampled probe, like the
+        reference's automatic detection) | None -> 'auto' (per-row)."""
+        t = Timber(df=df, text_col=text_col)
+        return t.format(detect_format(df, text_col) if fmt == "detect" else fmt or "auto")
 
     # ---- filters (all pure) ----------------------------------------------
+    def _with(self, **changes) -> "Timber":
+        return replace(self, q=replace(self.q, **changes))
+
     def chop(self, pattern: str) -> "Timber":
         """--chop: literal substring fast path or regex, auto-routed."""
-        return replace(self, pattern=pattern)
+        return self._with(pattern=pattern)
 
     def level(self, level: str) -> "Timber":
-        return replace(self, level_filter=level)
+        return self._with(level=level)
 
     def field(self, key: str, value: str) -> "Timber":
         """-f k=v (repeatable, ANDed)."""
-        return replace(self, fields={**self.fields, key: value})
+        return self._with(field_filters={**self.q.field_filters, key: value})
 
     def format(self, mode: str) -> "Timber":
-        return replace(self, mode=_validate_mode(mode))
+        """Fails here, like the reference CLI fails at parse time on an
+        unknown --format (reference src/main.rs:134-136) — not lazily at the
+        first action."""
+        if mode not in MODES:
+            raise ValueError(f"format must be one of {MODES}, got {mode!r}")
+        return self._with(mode=mode)
 
     def trend(self, on: bool = True) -> "Timber":
-        return replace(self, trends=on)
+        return self._with(trends=on)
 
     def stats(self, on: bool = True, top_errors: int = 5, show_unique: bool = False) -> "Timber":
-        return replace(self, stats_on=on, top_errors=top_errors, show_unique=show_unique)
+        return self._with(stats=on, top_errors=top_errors, show_unique=show_unique)
 
     def pandas_grok(self, on: bool = True) -> "Timber":
-        return replace(self, use_pandas_grok=on)
+        return self._with(use_pandas_grok=on)
 
     # ---- terminals --------------------------------------------------------
-    def _query(self) -> LogQuery:
-        return LogQuery(
-            pattern=self.pattern,
-            level=self.level_filter,
-            field_filters=self.fields,
-            mode=self.mode,
-            trends=self.trends,
-            stats=self.stats_on,
-            top_errors=self.top_errors,
-            show_unique=self.show_unique,
-            use_pandas_grok=self.use_pandas_grok,
-        )
-
     def matched(self) -> DataFrame:
         """The parsed+filtered spine as a DataFrame (lazy)."""
-        return matched(self.df, self._query(), self.text_col)
+        return matched(self.df, self.q, self.text_col)
 
     def frames(self, cache: bool = False) -> dict[str, DataFrame]:
         """Every requested aggregate as a lazy DataFrame."""
-        return analyze(self.df, self._query(), self.text_col, cache=cache)
+        return analyze(self.df, self.q, self.text_col, cache=cache)
 
     def count(self) -> int:
         """--count: Catalyst prunes everything but the count automatically."""
@@ -152,10 +135,9 @@ class Timber:
 
     def report(self) -> dict:
         """The reference's JSON document (formatter.rs:7-48)."""
-        q = self._query()
-        frames = analyze(self.df, q, self.text_col, cache=True)
+        frames = self.frames(cache=True)
         try:
-            return collect_report(frames, q)
+            return collect_report(frames, self.q)
         finally:
             frames["matched"].unpersist()
 

@@ -39,6 +39,7 @@ Row grammar (deterministic in i):
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -91,11 +92,6 @@ SF_ROWS = {"sf0.001": 6_000, "sf0.01": 60_000, "sf0.1": 600_000}
 # Bump whenever the generation grammar changes — versioned filenames invalidate
 # previously materialized fixture parquet.
 FIXTURE_VERSION = 3
-
-
-def n_rows_for_sf(sf_dir: str) -> int:
-    """Map a driver sf directory (e.g. /root/testdata/sf0.01) to a fixture size."""
-    return SF_ROWS.get(os.path.basename(os.path.normpath(sf_dir)), 60_000)
 
 
 def _levels_for(i: np.ndarray) -> np.ndarray:
@@ -205,94 +201,95 @@ def transcripts_arrow(n: int) -> pa.Table:
     return pa.Table.from_pandas(transcripts_pandas(n), schema=ARROW_SCHEMA, preserve_index=False)
 
 
+def _parquet_complete(path: str) -> bool:
+    """False for a missing file and for one an interrupted writer left
+    without its footer."""
+    try:
+        pq.read_metadata(path)
+    except (OSError, pa.ArrowInvalid):
+        return False
+    return True
+
+
 def transcripts_path(sf_dir_or_name: str) -> str:
     """Canonical fixture parquet path for a scale, generating it on first use."""
     name = os.path.basename(os.path.normpath(sf_dir_or_name))
     n = SF_ROWS.get(name, 60_000)
     os.makedirs(FIXTURE_DIR, exist_ok=True)
     path = os.path.join(FIXTURE_DIR, f"transcripts_{name}_v{FIXTURE_VERSION}.parquet")
-    if not os.path.exists(path):
+    if not _parquet_complete(path):
         # small row groups keep the single file splittable across Spark tasks
         # (one 600k-row row group would pin the whole scan to one task)
-        pq.write_table(transcripts_arrow(n), path, row_group_size=25_000)
+        tmp = f"{path}.{os.getpid()}.tmp"
+        pq.write_table(transcripts_arrow(n), tmp, row_group_size=25_000)
+        os.replace(tmp, path)
     return path
 
 
-def transcripts_stream_dir(sf_dir_or_name: str, n_files: int = 4) -> str:
-    """Directory form of the fixture (same rows, split into n_files parts) for
-    ``readStream`` sources; DuckDB oracles read the same files via glob."""
-    name = os.path.basename(os.path.normpath(sf_dir_or_name))
-    n = SF_ROWS.get(name, 60_000)
-    path = os.path.join(FIXTURE_DIR, f"transcripts_stream_{name}_v{FIXTURE_VERSION}")
-    if not os.path.isdir(path):
-        os.makedirs(path, exist_ok=True)
-        tbl = transcripts_arrow(n)
-        step = (n + n_files - 1) // n_files
-        for i in range(n_files):
-            pq.write_table(
-                tbl.slice(i * step, step),
-                os.path.join(path, f"part-{i:03d}.parquet"),
-                row_group_size=25_000,
-            )
-    return path
+STREAM_PARTS = 4
 
 
-def events_stream_dir(sf_dir: str, n_files: int = 4) -> str:
-    """Directory form of the testdata ``events`` table (same rows, split into
-    ``n_files`` parts in event-time order) for ``readStream`` sources —
-    FileStreamSource requires a directory, and a multi-file split makes the
-    availableNow drain genuinely multi-batch so cross-batch session-window
-    state merging is exercised, not just batch-in-one-trigger."""
-    name = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(sf_dir, "events.parquet")
+def _write_parts(table: pa.Table, path: str) -> None:
+    """Write ``table`` as STREAM_PARTS parquet files under ``path``, then the
+    ``_SUCCESS`` marker. A directory without the marker is an interrupted
+    write: callers regenerate it, so it is cleared first."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    step = (table.num_rows + STREAM_PARTS - 1) // STREAM_PARTS
+    for i in range(STREAM_PARTS):
+        pq.write_table(
+            table.slice(i * step, step),
+            os.path.join(path, f"part-{i:03d}.parquet"),
+            row_group_size=25_000,
+        )
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def _source_key(src: str) -> str:
     # content-address the cache on the SOURCE file's identity, not just the
     # fixture version: unlike the generated transcript fixtures, this data
     # comes from external testdata — if that parquet is regenerated, a
     # version-only key would silently serve stale rows against a fresh oracle
     st = os.stat(src)
-    key = f"{st.st_size}_{int(st.st_mtime)}"
-    path = os.path.join(FIXTURE_DIR, f"events_stream_{name}_v{FIXTURE_VERSION}_{key}")
-    done = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(done):  # marker guards against partial writes too
-        os.makedirs(path, exist_ok=True)
-        tbl = pq.read_table(src)
-        # time-ordered split: later files carry later events, the arrival
-        # pattern a log stream actually has (sessions open in batch i and
-        # extend in batch i+1)
-        tbl = tbl.sort_by("ts")
-        n = tbl.num_rows
-        step = (n + n_files - 1) // n_files
-        for i in range(n_files):
-            pq.write_table(
-                tbl.slice(i * step, step),
-                os.path.join(path, f"part-{i:03d}.parquet"),
-                row_group_size=25_000,
-            )
-        open(done, "w").close()
+    return f"{st.st_size}_{int(st.st_mtime)}"
+
+
+def transcripts_stream_dir(sf_dir_or_name: str) -> str:
+    """Directory form of the fixture (same rows, split into STREAM_PARTS
+    files) for ``readStream`` sources; DuckDB oracles read the same files via
+    glob."""
+    name = os.path.basename(os.path.normpath(sf_dir_or_name))
+    path = os.path.join(FIXTURE_DIR, f"transcripts_stream_{name}_v{FIXTURE_VERSION}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        _write_parts(transcripts_arrow(SF_ROWS.get(name, 60_000)), path)
     return path
 
 
-def documents_stream_dir(sf_dir: str, n_files: int = 4) -> str:
+def events_stream_dir(sf_dir: str) -> str:
+    """Directory form of the testdata ``events`` table (same rows, split into
+    STREAM_PARTS files in event-time order) for ``readStream`` sources —
+    FileStreamSource requires a directory, and a multi-file split makes the
+    availableNow drain genuinely multi-batch so cross-batch session-window
+    state merging is exercised, not just batch-in-one-trigger."""
+    name = os.path.basename(os.path.normpath(sf_dir))
+    src = os.path.join(sf_dir, "events.parquet")
+    path = os.path.join(FIXTURE_DIR, f"events_stream_{name}_v{FIXTURE_VERSION}_{_source_key(src)}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        # time-ordered split: later files carry later events, the arrival
+        # pattern a log stream actually has (sessions open in batch i and
+        # extend in batch i+1)
+        _write_parts(pq.read_table(src).sort_by("ts"), path)
+    return path
+
+
+def documents_stream_dir(sf_dir: str) -> str:
     """Directory form of the testdata ``documents`` table for ``readStream``
     sources (same content-addressed caching contract as events_stream_dir)."""
     name = os.path.basename(os.path.normpath(sf_dir))
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = f"{st.st_size}_{int(st.st_mtime)}"
-    path = os.path.join(FIXTURE_DIR, f"documents_stream_{name}_v{FIXTURE_VERSION}_{key}")
-    done = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(done):
-        os.makedirs(path, exist_ok=True)
-        tbl = pq.read_table(src)
-        n = tbl.num_rows
-        step = (n + n_files - 1) // n_files
-        for i in range(n_files):
-            pq.write_table(
-                tbl.slice(i * step, step),
-                os.path.join(path, f"part-{i:03d}.parquet"),
-                row_group_size=25_000,
-            )
-        open(done, "w").close()
+    path = os.path.join(FIXTURE_DIR, f"documents_stream_{name}_v{FIXTURE_VERSION}_{_source_key(src)}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        _write_parts(pq.read_table(src), path)
     return path
 
 

@@ -52,8 +52,10 @@ ERROR_TYPE_RE = (
 )
 
 # Anomaly tokens for the router's `anomalies` category (north-star addition; no
-# reference analog — FIXTURES.md §3).
-ANOMALY_RE = r"(timeout|OutOfMemoryError|rate limit exceeded|query took)"
+# reference analog — FIXTURES.md §3). Plain literals: the Spark router matches
+# each with `contains`, the DuckDB oracle with the alternation ANOMALY_RE.
+ANOMALY_TOKENS = ["timeout", "OutOfMemoryError", "rate limit exceeded", "query took"]
+ANOMALY_RE = "(" + "|".join(ANOMALY_TOKENS) + ")"
 
 # JSON key fallback orders, first present key wins (reference: src/parser/json.rs:9-15).
 JSON_TIMESTAMP_KEYS = ["timestamp", "time", "@timestamp", "date", "datetime"]

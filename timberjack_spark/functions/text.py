@@ -91,19 +91,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     )
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: length band + low punctuation +
-    stopword presence. Weights are arbitrary but fixed; the point is a
-    deterministic, fully-JVM scoring stage."""
-    n = F.length(text)
-    len_score = F.when((n >= 64) & (n <= 4096), 1.0).when(n > 4096, 0.7).otherwise(
-        F.round(n / F.lit(64.0), 6)
-    )
-    punct_score = F.when(punct_ratio(text) < 0.2, 1.0).otherwise(0.5)
-    stop_score = F.when(stopword_ratio(text) > 0.05, 1.0).otherwise(0.6)
-    return F.round((len_score * 0.5 + punct_score * 0.25 + stop_score * 0.25), 6)
-
-
 def lang_scores(text: Column) -> dict[str, Column]:
     return {lang: stopword_count(text, lang) for lang in LANG_STOPWORDS}
 
@@ -228,11 +215,11 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     df = _ensure_parallelism(df)
     t = F.col(text_col)
-    # layered projections so each interpreted signal evaluates ONCE:
-    # quality_score(t)/stopword_ratio(t) inline would re-fold the token
-    # split, punct regexp and stopword filter a second and third time per
-    # row (the quality_filter lesson — identical rounded expressions, so
-    # every derived value is bit-identical to the inlined form).
+    # layered projections so each interpreted signal evaluates ONCE: the
+    # quality composite (length band + low punctuation + stopword presence,
+    # fixed weights) reads the projected columns instead of re-folding the
+    # token split, punct regexp and stopword filter per row (the
+    # quality_filter lesson).
     base = df.withColumns(
         {
             "n_tokens": token_count(t),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..functions import extract
 from ..functions.grok import with_parsed_pandas
 from . import aggregates as agg
-from .filters import field_filters_predicate, level_predicate, parse_field_filters, pattern_predicate
+from .filters import field_filters_predicate, level_predicate, pattern_predicate
 
 
 @dataclass(frozen=True)
@@ -35,20 +35,6 @@ class LogQuery:
     top_errors: int = 5                 # --top-errors
     show_unique: bool = False           # --show-unique
     use_pandas_grok: bool = False       # route extraction through the Arrow UDF stage
-
-    @staticmethod
-    def from_cli(
-        pattern: str | None = None,
-        level: str | None = None,
-        fields: list[str] | None = None,
-        **kw,
-    ) -> "LogQuery":
-        return LogQuery(
-            pattern=pattern,
-            level=level,
-            field_filters=parse_field_filters(fields or []),
-            **kw,
-        )
 
 
 def matched(df: DataFrame, q: LogQuery, text_col: str = "text") -> DataFrame:

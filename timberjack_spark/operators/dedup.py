@@ -20,13 +20,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-from ..functions.extract import ws_trim
-from ..functions.patterns import WS_CLASS
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -69,38 +66,22 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ---------------------------------------------------------------------------
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct), built with higher-order functions
-    (sequence + transform + slice) — pure JVM."""
-    # ws_trim, not F.trim: the Unicode charset is shared with the DuckDB
-    # twins (bare trim() diverges on NBSP-framed text — see token_count)
-    toks = F.split(F.lower(ws_trim(text)), WS_CLASS + "+")
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    # short docs: fall back to the whole text as a single shingle
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(F.array(F.lower(ws_trim(text))))
-
-
 def make_grams_udf(n: int):
-    """Arrow-batched twin of :func:`shingles` for full-corpus gram explodes.
+    """Arrow-batched word n-gram (shingle) arrays: the grams of
+    decontamination, the candidate-verify joins and the blocked Jaccard.
 
-    The Catalyst shingles expression (sequence + transform + slice +
-    array_join) is INTERPRETED — a salted fresh-plan probe reads 26.9 JVM
-    cpu-s per sf0.1 corpus pass (~6 ms/doc), which at 10^9 docs is real
-    cluster money. The same semantics in batch Python (one regex split + a
-    set build per doc) read 1.8 JVM cpu-s for the identical pass (wall 1.36
-    -> 0.65 s at 32 cores; the Python-worker cpu rides outside the JVM and
-    is itself small).
-    Kept byte-identical to shingles(): ws_trim charset strip, lower, split
-    on the shared WS class, first-occurrence-distinct n-grams, whole-text
-    fallback for short docs, [null] for null text — the decontamination
-    fuzz twin (tests/test_property_parse.py) pins the parity against the
-    DuckDB oracle on exotic-whitespace/non-ASCII alphabets. Used where the
-    gram stream covers the WHOLE corpus (decontamination); candidate-verify
-    joins keep the JVM expression (they see only the pruned survivors)."""
+    Batch Python, not a Catalyst higher-order expression (sequence +
+    transform + slice + array_join): that expression runs INTERPRETED — a
+    salted fresh-plan probe read 26.9 JVM cpu-s per sf0.1 corpus pass
+    (~6 ms/doc) against 1.8 for this UDF (one regex split + a set build per
+    doc; wall 1.36 -> 0.65 s at 32 cores; the Python-worker cpu rides
+    outside the JVM and is itself small).
+    Contract: ws_trim charset strip, lower, split on the shared WS class,
+    first-occurrence-distinct n-grams, whole-text fallback for short docs,
+    [null] for null text — the decontamination fuzz twin
+    (tests/test_property_parse.py::test_decontaminate_matches_duckdb_twin)
+    pins it against the DuckDB oracle on exotic-whitespace/non-ASCII
+    alphabets."""
     import re
 
     from ..functions.extract import _WS
@@ -134,16 +115,6 @@ def make_grams_udf(n: int):
     return pandas_udf(_batch, "array<string>")
 
 
-def minhash_signature(sh: Column, k: int = 64) -> Column:
-    """k minhashes via JVM expressions: min over shingles of xxhash64(shingle,
-    seed_j). Exact but interpreted per element — O(k * |shingles|) lambda
-    evaluations; prefer :func:`minhash_signatures` (codegen'd explode + partial
-    hash-agg) for large corpora."""
-    return F.array(
-        *[F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(j)))) for j in range(k)]
-    )
-
-
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3, k: int = 64
 ) -> DataFrame:
@@ -164,16 +135,15 @@ def minhash_signatures(
 
 
 def make_minhash_udf(k: int = 64, n: int = 3, seed: int = 42):
-    """Arrow-batched minhash (the pandas-UDF alternate to the default
-    JVM-expression path in :func:`minhash_signatures`).
+    """Arrow-batched minhash, the signature stage of :func:`minhash_signatures`.
 
     The whole batch's shingles are hashed in ONE vectorized call
     (``pd.util.hash_array`` — C-level SipHash over the object array, no
     per-shingle Python hashing), then an affine family
     (a_j * h + b_j mod 2^64) gives the k permutations as a (k, total_shingles)
     matrix whose per-row segment minima come from ``np.minimum.reduceat``.
-    Tokenization matches shingles(): lower, whitespace split, word n-grams,
-    whole trimmed text when shorter than n tokens."""
+    Tokenization: lower, whitespace split, distinct word n-grams, the whole
+    lowered and stripped text when shorter than n tokens, null as ''."""
     rng = np.random.RandomState(seed)
     A = (rng.randint(1, 2**62, size=k, dtype=np.uint64) * np.uint64(2) + np.uint64(1))
     B = rng.randint(0, 2**63, size=k, dtype=np.uint64)
@@ -391,15 +361,13 @@ def exact_jaccard_verify(
         F.explode(F.array("id_a", "id_b")).alias("_id")
     ).distinct()
     # prune FIRST (broadcast semi join), parallelize, THEN build shingle
-    # arrays — via the Arrow grams UDF, whose output is pinned byte-identical
-    # to the shingles() expression (make_grams_udf docstring + fuzz twin), so
-    # the jaccard arithmetic downstream sees the same arrays while the
-    # per-doc cost drops ~15x vs the interpreted higher-order expression —
-    # and materialize them once. LAZY checkpoint: the final job itself
-    # materializes-and-caches base the first time a branch reads it, so the
-    # dedup happens without a dedicated driver job barrier (without any
-    # checkpoint each of the sh_a/sh_b branches and their broadcast builds
-    # re-evaluates the gram stage).
+    # arrays — via the Arrow grams UDF (make_grams_udf: ~15x less per-doc cpu
+    # than an interpreted higher-order expression) — and materialize them
+    # once. LAZY checkpoint: the final job itself materializes-and-caches
+    # base the first time a branch reads it, so the dedup happens without a
+    # dedicated driver job barrier (without any checkpoint each of the
+    # sh_a/sh_b branches and their broadcast builds re-evaluates the gram
+    # stage).
     base = (
         _ensure_parallelism(df.join(hint(cand_ids), F.col(id_col) == F.col("_id"), "left_semi"))
         .select(F.col(id_col).alias("_id"), make_grams_udf(n)(F.col(text_col)).alias("_sh"))
@@ -765,10 +733,10 @@ def ngram_jaccard_pairs(
     identical to before (the self-join also sent each block to one reducer),
     and exactly the small-block regime this operator contracts for.
 
-    _ensure_parallelism: the shingle arrays are interpreted higher-order
-    expressions evaluated BELOW the block-key exchange, i.e. on the scan's
-    partitioning — a small single-file corpus would compute every shingle
-    array on ONE core. Measured at sf0.1: 126 s -> 6 s. No-op at real scale.
+    _ensure_parallelism: the shingle arrays are built BELOW the block-key
+    exchange, i.e. on the scan's partitioning — a small single-file corpus
+    would compute every shingle array on ONE core (measured at sf0.1 with the
+    interpreted gram expression: 126 s -> 6 s). No-op at real scale.
 
     NULL block keys: groupBy treats NULL as a regular group, so rows with a
     NULL blocking value pair WITH EACH OTHER — unlike the pre-r5 self-join
@@ -780,8 +748,7 @@ def ngram_jaccard_pairs(
         *[F.col(c) for c in block_cols],
         # id FIRST: array_sort orders structs field-by-field, so members sort
         # by id and the pair explode emits id_a < id_b by construction.
-        # Arrow grams UDF, byte-identical to the shingles() expression
-        # (make_grams_udf contract) at ~15x less per-doc cpu.
+        # Arrow grams UDF (make_grams_udf contract).
         F.struct(
             F.col(id_col).alias("i"), make_grams_udf(n)(F.col(text_col)).alias("s")
         ).alias("_m"),
@@ -829,9 +796,9 @@ def decontaminate_flags(
     A training doc is contaminated when ANY of its word ``n``-grams appears
     anywhere in the eval corpus — the classic 8-to-13-gram overlap rule for
     benchmark decontamination. ``n_eval_grams_hit`` counts the doc's DISTINCT
-    n-grams found in the eval set (shingles() already dedups grams per doc),
+    n-grams found in the eval set (make_grams_udf already dedups grams per doc),
     so severity is rankable, and docs below ``n`` tokens fall back to
-    whole-text membership (the shingles() short-doc contract).
+    whole-text membership (the make_grams_udf short-doc contract).
 
     Scale shape: the eval corpus is benchmarks — orders of magnitude smaller
     than the training corpus — so its distinct grams broadcast (~10^7 grams
@@ -856,15 +823,14 @@ def decontaminate_flags(
     # sides: SQL `IN` semantics (the oracle) never match NULL, and null text
     # carries no content to decontaminate against.
     # Arrow-batched gram UDF on BOTH sides: this operator explodes grams for
-    # the whole corpus, where the interpreted Catalyst shingles expression
-    # costs ~45x more cpu per doc (see make_grams_udf). _ensure_parallelism
+    # the whole corpus, where an interpreted Catalyst gram expression costs
+    # ~45x more cpu per doc (see make_grams_udf). _ensure_parallelism
     # spreads a small single-file scan across cores (no-op at scale).
     grams = make_grams_udf(n)
     # NO _ensure_parallelism on the eval side: the eval corpus is benchmark-
     # sized and the gram UDF is Arrow-batched, so the repartition's extra
     # shuffle stage costs more than the parallelism buys (measured 0.59 ->
-    # 0.33 s at sf0.1; the interpreted-expression paths that need the guard
-    # keep it — see exact_jaccard_verify)
+    # 0.33 s at sf0.1)
     g_eval = (
         eval_df.select(F.col(text_col))
         .select(F.explode(grams(F.col(text_col))).alias("_g"))
@@ -873,9 +839,9 @@ def decontaminate_flags(
     )
     hint = F.broadcast if use_broadcast else (lambda x: x)
     # _ensure_parallelism: a small single-file corpus scans as ONE partition
-    # and the gram explode (the dominant cost — interpreted higher-order
-    # shingle expressions) would run on one core (measured 19.8 s -> ~2 s at
-    # sf0.1); no-op at real scale where the scan has thousands of splits.
+    # and the gram explode (the dominant cost) would run on one core
+    # (measured 19.8 s -> ~2 s at sf0.1); no-op at real scale where the scan
+    # has thousands of splits.
     # explode_OUTER keeps a null-gram row for gram-less (null-text) docs, so
     # ONE scan + ONE broadcast-left join + ONE aggregation covers the whole
     # training corpus — the earlier semi-join shape needed a second corpus

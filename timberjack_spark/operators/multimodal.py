@@ -76,6 +76,38 @@ def synthesize_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
+def _synthesize(df: DataFrame, id_col: str, bytes_batch) -> DataFrame:
+    """(media_id, payload) with ``bytes_batch(ids)`` building one Arrow
+    batch's payloads."""
+    from .dedup import _ensure_parallelism
+
+    base = _ensure_parallelism(df.select(F.col(id_col).cast("long").alias("media_id")))
+
+    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "payload": bytes_batch(pdf["media_id"].to_numpy()),
+                }
+            )
+
+    return base.mapInPandas(gen, "media_id long, payload binary")
+
+
+def _extract(df: DataFrame, decode_batch, schema: str) -> DataFrame:
+    """(media_id, features...) with ``decode_batch(payloads)`` returning one
+    Arrow batch's feature frame in ``schema`` order, minus media_id."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = decode_batch(list(pdf["payload"]))
+            out.insert(0, "media_id", pdf["media_id"].values)
+            yield out
+
+    return df.mapInPandas(batches, schema)
+
+
 # ---------------------------------------------------------------------------
 # REAL video: YUV4MPEG2 (Y4M) synthesis + pure-numpy demux/decode
 #
@@ -202,35 +234,16 @@ VIDEO_FEATURE_SCHEMA = (
 
 def synthesize_video_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(media_id, payload): real Y4M bytes per row, built Arrow-batch-wise."""
-    from .dedup import _ensure_parallelism
-
-    base = _ensure_parallelism(df.select(F.col(id_col).cast("long").alias("media_id")))
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": y4m_bytes_batch(pdf["media_id"].to_numpy()),
-                }
-            )
-
-    return base.mapInPandas(gen, "media_id long, payload binary")
+    return _synthesize(df, id_col, y4m_bytes_batch)
 
 
 def extract_video_features(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL decode: Y4M container -> frame/plane features.
     The per-payload demux walk is inherently sequential (variable-length
     FRAME headers) but cheap; the plane math is numpy per payload."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [decode_video(p) for p in pdf["payload"]]
-            out = pd.DataFrame(rows)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return df.mapInPandas(batches, VIDEO_FEATURE_SCHEMA)
+    return _extract(
+        df, lambda ps: pd.DataFrame([decode_video(p) for p in ps]), VIDEO_FEATURE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -341,20 +354,7 @@ AUDIO_FEATURE_SCHEMA = (
 
 def synthesize_audio_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(media_id, payload): real WAV bytes per row, built Arrow-batch-wise."""
-    from .dedup import _ensure_parallelism
-
-    base = _ensure_parallelism(df.select(F.col(id_col).cast("long").alias("media_id")))
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": wav_bytes_batch(pdf["media_id"].to_numpy()),
-                }
-            )
-
-    return base.mapInPandas(gen, "media_id long, payload binary")
+    return _synthesize(df, id_col, wav_bytes_batch)
 
 
 def decode_audio_batch(payloads) -> pd.DataFrame:
@@ -401,14 +401,7 @@ def decode_audio_batch(payloads) -> pd.DataFrame:
 
 def extract_audio_features(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL decode: WAV container -> DSP features."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = decode_audio_batch(list(pdf["payload"]))
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return df.mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
+    return _extract(df, decode_audio_batch, AUDIO_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -480,31 +473,15 @@ IMAGE_FEATURE_SCHEMA = (
 
 
 def synthesize_image_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    from .dedup import _ensure_parallelism
-
-    base = _ensure_parallelism(df.select(F.col(id_col).cast("long").alias("media_id")))
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": ppm_bytes_batch(pdf["media_id"].to_numpy()),
-                }
-            )
-
-    return base.mapInPandas(gen, "media_id long, payload binary")
+    """(media_id, payload): real P6 PPM bytes per row, built Arrow-batch-wise."""
+    return _synthesize(df, id_col, ppm_bytes_batch)
 
 
 def extract_image_features(df: DataFrame) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [decode_image(p) for p in pdf["payload"]]
-            out = pd.DataFrame(rows)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return df.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    """Arrow-batched REAL decode: P6 PPM -> dimensions + channel means."""
+    return _extract(
+        df, lambda ps: pd.DataFrame([decode_image(p) for p in ps]), IMAGE_FEATURE_SCHEMA
+    )
 
 
 def fake_features(payload: bytes) -> np.ndarray:

@@ -6,30 +6,25 @@ Categories (FIXTURES.md §3, first match wins):
   anomalies  — anomaly tokens in the text without an error-level
   dialogue   — everything else
 
-The fan-out itself is the idiomatic single-pass design (SURVEY.md §4.2): ONE
-write partitioned by ``category`` — Spark has no multi-insert, and N filtered
-writes would scan the source N times. Per-sink counts come from the same pass
-via ``groupBy(category)``.
+The fan-out itself is ``sources.checkpoint.run_resumable_fanout``: ONE write
+partitioned by ``category`` (and resume bucket) — Spark has no multi-insert,
+and N filtered writes would scan the source N times.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.patterns import ANOMALY_RE
+from ..functions.patterns import ANOMALY_TOKENS
 
 CATEGORIES = ["errors", "tool-calls", "anomalies", "dialogue"]
 
-# ANOMALY_RE is a pure literal alternation, so a multi-contains disjunction is
-# semantically identical (boolean match, order irrelevant) and runs as
-# codegen'd StringContains instead of a regex scan
-ANOMALY_TOKENS = ["timeout", "OutOfMemoryError", "rate limit exceeded", "query took"]
-
 
 def _anomaly_pred(text: Column) -> Column:
+    # ANOMALY_RE is a pure literal alternation of the tokens, so a
+    # multi-contains disjunction is semantically identical (boolean match,
+    # order irrelevant) and runs as codegen'd StringContains, not a regex scan
     pred = F.lit(False)
     for tok in ANOMALY_TOKENS:
         pred = pred | text.contains(tok)
@@ -74,38 +69,3 @@ def sink_counts(df: DataFrame) -> DataFrame:
     return (
         df.groupBy("category").agg(F.count(F.lit(1)).alias("cnt")).orderBy("category")
     )
-
-
-def fan_out_write(
-    df: DataFrame, base_path: str, mode: str = "overwrite", audit_readback: bool = False
-) -> dict[str, int]:
-    """Single-pass fan-out: write once, partitioned by category.
-
-    On Iceberg deployments this is the same plan against a partitioned Iceberg
-    table (``df.writeTo(tbl).overwritePartitions()``); the sandbox has no
-    Iceberg runtime jar, so the file-based sink keeps the identical layout
-    (``category=<sink>/`` directories).
-
-    Per-sink counts come from the same cached pass as the write (one source
-    scan). ``audit_readback=True`` re-reads the written sinks and raises on
-    divergence — an end-to-end audit that costs a second full sink scan, so it
-    is opt-in rather than the default at 100 TB.
-    """
-    from pyspark import StorageLevel
-
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            cached.write.mode(mode)
-            .partitionBy("category")
-            .parquet(os.path.join(base_path, "routed"))
-        )
-        counts = {r["category"]: r["cnt"] for r in sink_counts(cached).collect()}
-    finally:
-        cached.unpersist()
-    if audit_readback:
-        written = df.sparkSession.read.parquet(os.path.join(base_path, "routed"))
-        got = {r["category"]: r["cnt"] for r in sink_counts(written).collect()}
-        if got != counts:
-            raise RuntimeError(f"fan-out audit mismatch: wrote {counts} but sinks hold {got}")
-    return counts
