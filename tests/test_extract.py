@@ -3,6 +3,7 @@
 import pandas as pd
 import pytest
 
+import oracle_ref
 from timberjack_spark.fixtures import transcripts_pandas
 from timberjack_spark.functions.extract import with_parsed
 from timberjack_spark.functions.grok import grok_batch, with_parsed_pandas
@@ -75,6 +76,45 @@ def test_msg_key_split_semantics(edges):
     assert edges["a]b]c"]["msg_key"] == "b"
     assert edges["one ] bracket only at position"]["msg_key"] == "bracket only at position"
     assert edges["no level or timestamp in this line"]["msg_key"] == "no level or timestamp in this line"
+
+
+# (text, level) for the generic level pattern's edge forms: word boundaries
+# (WARNING vs WARNINGS), bracket/colon adjacency, leftmost-first between the
+# two alternatives, and non-ASCII look-alikes that (?i) must NOT fold (Java
+# and RE2 fold ASCII only; the Kelvin sign before WARN is not a level letter)
+LEVEL_CASES = [
+    ("[WARNING]", "WARNING"),
+    ("WARNING:", "WARNING:"),
+    ("WARNINGS:", ""),
+    ("[Warn]", "WARN"),
+    ("xERROR:", "ERROR:"),
+    ("[ERROR:", "ERROR:"),
+    ("[ERROR] WARN:", "ERROR"),
+    ("WARN: [ERROR]", "WARN:"),
+    ("[[ERROR]]", "ERROR"),
+    ("]ERROR:", "ERROR:"),
+    ("trace:trace:", "TRACE:"),
+    ("[DEBUG]:", "DEBUG"),
+    ("info: Debug:", "INFO:"),
+    ("Severe:", "SEVERE:"),
+    ("[fine] FINE:", "FINE"),
+    ("[ fine]", ""),
+    ("severe", ""),
+    ("\u0130NFO:", ""),
+    ("\u017fevere:", ""),
+    ("\u212aWARN:", "WARN:"),
+    ("", ""),
+]
+
+
+@pytest.mark.parametrize("mode", ["generic", "auto"])
+def test_level_edge_cases_match_reference(spark, mode):
+    df = spark.createDataFrame([(t,) for t, _ in LEVEL_CASES] + [(None,)], "text string")
+    got = {r["text"]: r["level"] for r in with_parsed(df, mode=mode).collect()}
+    for text, level in LEVEL_CASES:
+        assert oracle_ref.extract_level(text, None) == level, text
+        assert got[text] == level, text
+    assert got[None] is None  # null text keeps a null level
 
 
 def test_json_level_and_ts(edges):

@@ -2,11 +2,14 @@
 be visible in the plan, not assumed — pushdown into the parquet scan, column
 pruning, broadcast (not sort-merge) enrich joins, partial aggregation."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from timberjack_spark.fixtures import dim_role_df, dim_tool_df, transcripts_path
 from timberjack_spark.functions.extract import with_parsed
+from timberjack_spark.functions.patterns import LEVEL_RE
 from timberjack_spark.operators.analyze import LogQuery, matched
 from timberjack_spark.operators.enrich import enrich
 from timberjack_spark.operators.route import with_category
@@ -42,6 +45,17 @@ def test_enrich_joins_are_broadcast(spark, src):
     plan = plan_of(e.groupBy("category").count())
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
+    # the dims are local relations: each broadcast collects a LocalTableScan
+    # in the JVM, with no Python-RDD job
+    assert "ExistingRDD" not in plan
+    children = re.findall(r"BroadcastExchange [^\n]*\n[\s:|]*\+- (\w+)", plan)
+    assert children == ["LocalTableScan", "LocalTableScan"], children
+
+
+def test_level_is_one_regexp_extract(spark, src):
+    plan = plan_of(with_parsed(src, mode="generic").groupBy("level").count())
+    assert plan.count("regexp_extract(") == 1
+    assert plan.count(LEVEL_RE) == 1  # the JVM twin embeds LEVEL_RE verbatim
 
 
 def test_aggregation_is_partial_then_final(spark, src):

@@ -23,6 +23,12 @@ WORDS = ["Cache", "miss", "user_42", "Connection", "timeout", "NullPointerExcept
          # ASCII-only and could not see the ws_trim divergence ADVICE flagged
          "\xa0", "\u2028", "\u3000"]
 
+# glued with no separator, so every '[', ']' and ':' adjacency of a level word
+# and the near-miss first characters (x, S, the look-alikes İ, ſ and the
+# Kelvin sign) reach the level pattern's first-character gate
+LEVEL_PARTS = LEVELS + ["WARNINGS", "Warn", "fine", "Severe", "[", "]", ":", "x", "S",
+                        "\u0130", "\u017f", "\u212a", " "]
+
 line_st = st.one_of(
     # bracketed-level generic lines
     st.builds(
@@ -48,6 +54,8 @@ line_st = st.one_of(
         st.text(alphabet="abc ]{[}", max_size=12),
         st.booleans(),
     ),
+    # level soup
+    st.builds("".join, st.lists(st.sampled_from(LEVEL_PARTS), max_size=8)),
     # arbitrary junk
     st.text(alphabet="abcERROR[]{}:1 .\t\xa0\u3000", max_size=40),
 )

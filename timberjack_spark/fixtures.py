@@ -48,6 +48,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_table
+
 # The 20 benchmark message templates (data, not code — they drive the closed-form
 # expected aggregates; /root/reference/src/bin/create_benchmark_logs.rs:49-70).
 TEMPLATES = [
@@ -428,8 +430,9 @@ def transcripts_df(spark: SparkSession, n: int, partitions: int | None = None) -
     )
 
 
-# per-session cache: createDataFrame is a driver-side py4j conversion that
-# costs real serial milliseconds on every flagship run; the dims are constants.
+# per-session cache: building a local table is a driver-side py4j conversion
+# that costs real serial milliseconds on every flagship run; the dims are
+# constants.
 # Values hold the session reference, so a cached id() can never be recycled.
 _DIM_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
 
@@ -439,7 +442,7 @@ def _cached_dim(spark: SparkSession, name: str, rows, schema: str) -> DataFrame:
     hit = _DIM_CACHE.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
-    df = spark.createDataFrame(rows, schema)
+    df = local_table(spark, rows, schema)
     for k in [k for k in _DIM_CACHE if _DIM_CACHE[k][0] is not spark]:
         del _DIM_CACHE[k]  # drop entries of stopped sessions
     _DIM_CACHE[key] = (spark, df)

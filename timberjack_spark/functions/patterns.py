@@ -5,7 +5,8 @@ and /root/reference/src/parser/generic.rs:5-13), but every pattern here is writt
 portable subset shared by Java regex (Spark), Python ``re`` (pandas UDFs) and RE2 (the
 DuckDB oracle): scoped ``(?i:...)`` groups instead of mid-pattern ``(?i)`` flags, no
 lookaround, no backreferences. That pinning is what makes per-turn text equality hold
-across the three dialects (SURVEY.md §7.3).
+across the three dialects (SURVEY.md §7.3). The one exception is ``LEVEL_RE_JVM``: a
+Java-only speed twin of ``LEVEL_RE``, derived from it, that no other dialect sees.
 """
 
 # Unicode White_Space codepoints — the exact set Rust's str::trim and the
@@ -37,6 +38,16 @@ LEVEL_RE = (
     r"\[(?i:(ERROR|WARN|INFO|DEBUG|TRACE|SEVERE|WARNING|FINE))\]"
     r"|(?i:ERROR|WARN|INFO|DEBUG|TRACE|SEVERE|WARNING|FINE):"
 )
+
+# JVM-only twin of LEVEL_RE, derived from it: the same alternatives behind a
+# first-character lookahead. Lookaround is outside the portable subset (RE2
+# rejects it), so only the Catalyst parse (extract.py:generic_level) uses it;
+# the DuckDB oracle, the Arrow grok twin and the Python oracle keep LEVEL_RE.
+# The gate is exact because Java's (?i) folds ASCII only: every match starts
+# with '[' or an ASCII case of E/W/I/D/T/S/F. It lets java.util.regex reject
+# most offsets with one character-class test instead of trying the 9-way
+# case-insensitive alternation at each of them.
+LEVEL_RE_JVM = r"(?=[\[EeWwIiDdTtSsFf])(?:" + LEVEL_RE + ")"
 
 # Timestamp extraction: space-separated date-time only (the ISO 'T' form deliberately
 # does NOT match — JSON timestamps come from the JSON fields instead).

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..session import local_table
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -283,14 +285,12 @@ def ivf_topk(
     centroids so the test contract (recall vs brute force) is self-contained.
 
     The quantizer (centroid table) is tiny by construction, so it is computed
-    once, collected, and re-planned as a local relation — every downstream use
-    broadcasts it instead of re-running (or pinning in cache) the centroid
-    aggregation job.
+    once, collected, and re-planned as a local relation (``local_table``, a
+    ``LocalTableScan``) — every downstream use broadcasts it from the JVM
+    instead of re-running (or pinning in cache) the centroid aggregation job.
     """
     cents_rows = label_centroids(corpus)
-    cents = corpus.sparkSession.createDataFrame(
-        cents_rows.collect(), schema=cents_rows.schema
-    )
+    cents = local_table(corpus.sparkSession, cents_rows.collect(), cents_rows.schema)
     assigned = assign_nearest_centroid(corpus, cents, id_col, vec_col).select(
         F.col("vec_id").alias("neighbor_id"), "cluster"
     )
@@ -424,7 +424,7 @@ def semantic_dedup(
     blocks must fit a task either way; size n_clusters accordingly).
     """
     cents_rows = centroids if centroids is not None else label_centroids(df, vec_col=vec_col)
-    cents = df.sparkSession.createDataFrame(cents_rows.collect(), schema=cents_rows.schema)
+    cents = local_table(df.sparkSession, cents_rows.collect(), cents_rows.schema)
     assigned = assign_nearest_centroid(df, cents, id_col, vec_col).select("vec_id", "cluster")
     with_vec = assigned.join(
         df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")), "vec_id"

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -84,6 +87,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A constant table over driver-side rows, planned as a ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` plans a ``LogicalRDD`` over pickled
+    Python rows: a broadcast of it runs a job whose tasks wait on Python
+    workers (about 0.3 s per broadcast on 4 cores) to hand back rows the
+    driver already holds. An Arrow table under the local-relation threshold
+    becomes a ``LocalTableScan`` instead; its broadcast still collects through
+    a small job, but one that stays in the JVM and takes milliseconds.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:
